@@ -38,11 +38,8 @@ import graft.state.LogStore
   */
 final class IngestionRun(spark: SparkSession, lakeRoot: String, logStore: LogStore,
                          inclusiveBump: Boolean = true,
-                         overwritePartitions: Boolean = false,
                          cacheSlice: Boolean = true,
                          txLake: Boolean = false) {
-  require(!(txLake && overwritePartitions),
-    "txLake replaces overwritePartitions: commits are already all-or-nothing")
 
   def lakePath(spec: IngestionSpec): String =
     s"$lakeRoot/${spec.databasename}/${spec.tablename}"
@@ -93,6 +90,12 @@ final class IngestionRun(spark: SparkSession, lakeRoot: String, logStore: LogSto
         lakeP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(lakeP)
       }
     val rawSlice = Incremental.incrementalSlice(source, spec.deltaExpr, start)
+    // Every persist below registers in `cached` INSIDE the try, so a
+    // failure anywhere after it — e.g. an analysis error building the
+    // boundary-dedup join on a misspelled primary key — still releases
+    // the session cache in the finally.
+    var cached = List.empty[DataFrame]
+    try {
     // ONE cached read of the lake's watermark tail serves every
     // committed-lake consumer this run has (boundary dedup AND the
     // pre-window count — measured: they were two full lake scans). The
@@ -111,6 +114,7 @@ final class IngestionRun(spark: SparkSession, lakeRoot: String, logStore: LogSto
         }
         val d = readLake(spec, txFiles).filter(tailPred)
         d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        cached ::= d
         Some(d)
       }
     // non-inclusive (`>=` boundary) watermarks re-extract rows already
@@ -139,9 +143,10 @@ final class IngestionRun(spark: SparkSession, lakeRoot: String, logStore: LogSto
     // that mutate mid-run (all branches read the one materialization);
     // count validation stays as the safety net for the recompute-on-
     // executor-loss path, where a mutated source can still leak through.
-    if (cacheSlice)
+    if (cacheSlice) {
       slice.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+      cached ::= slice
+    }
     val (_, hiOpt, n) = Incremental.deltaBounds(slice, spec.deltaExpr)
     if (n == 0L) {
       // "Empty Dataframe" short-circuit (reference: ingest_mysql_data.py:365-368)
@@ -155,13 +160,6 @@ final class IngestionRun(spark: SparkSession, lakeRoot: String, logStore: LogSto
     val filesBefore =
       if (txLake) Set.empty[String] // commit-or-nothing: no rollback diffing
       else graft.sink.Rollback.listFiles(spark, lakePath(spec))
-    // overwritePartitions: idempotent re-runs — replace exactly the
-    // partitions this run touches instead of appending (the at-scale
-    // alternative to delete-rollback; needs derived partition columns)
-    val mode =
-      if (overwritePartitions && partCols.nonEmpty) SaveMode.Overwrite else SaveMode.Append
-    if (mode == SaveMode.Overwrite)
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     // Validation invariant: lake_window_after == pre_window + slice_window,
     // every count over ONE shared predicate (Validation.windowPredicate —
@@ -173,9 +171,7 @@ final class IngestionRun(spark: SparkSession, lakeRoot: String, logStore: LogSto
     //    must not inflate this run's expectation.
     //  - preWindowCount: lake rows already inside the window before this
     //    run (boundary re-extraction in non-inclusive mode, re-extracted
-    //    over-the-end rows from a prior coalesce run). Under dynamic
-    //    overwrite the run's touched partitions are REPLACED, so pre rows
-    //    inside them don't survive and are excluded from the expectation.
+    //    over-the-end rows from a prior coalesce run).
     // plain-column delta: end IS max(delta) over this slice and every
     // slice row is >= start, so the window count equals n by construction
     // — skip the extra count job. Only a coalesce delta can place rows
@@ -188,12 +184,9 @@ final class IngestionRun(spark: SparkSession, lakeRoot: String, logStore: LogSto
       else {
         // from the cached tail: windowPredicate ⊆ the tail's per-column
         // `>= start` superset, so this is the same count with no new scan
-        val preWindow = lakeTail.get
+        lakeTail.get
           .filter(Validation.windowPredicate(spec.deltaExpr, start, end))
-        if (mode == SaveMode.Overwrite) {
-          val touched = withParts.select(partCols.map(col): _*).distinct()
-          preWindow.join(touched, partCols, "left_anti").count()
-        } else preWindow.count()
+          .count()
       }
     // cluster rows by the delta field inside each output file: parquet
     // row-group min/max stats on the watermark column then prune most of
@@ -227,7 +220,7 @@ final class IngestionRun(spark: SparkSession, lakeRoot: String, logStore: LogSto
           partitionBy = partCols, maxRecordsPerFile = 5000000L)
       else {
         val writer = observed.write
-          .mode(mode)
+          .mode(SaveMode.Append)
           .option("compression", "snappy")
           .option("maxRecordsPerFile", 5000000)
         (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
@@ -287,9 +280,6 @@ final class IngestionRun(spark: SparkSession, lakeRoot: String, logStore: LogSto
     val rows = Seq(loaded, validated)
     logStore.append(rows)
     rows
-    } finally {
-      if (cacheSlice) slice.unpersist()
-      lakeTail.foreach(_.unpersist())
-    }
+    } finally cached.foreach(_.unpersist())
   }
 }

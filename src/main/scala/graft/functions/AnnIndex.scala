@@ -314,10 +314,11 @@ object AnnIndex {
     * probe recall degrade from there. The stat is recorded, never
     * enforced: rebuild cadence is the operator's call.
     *
-    * How to read it under GRADUAL shift (tools.DriftShiftAb, round
-    * 11): for a batch mixing fraction α of a new mode into the
-    * trained distribution, TV grows ≈ α · TV(pure new mode) — the
-    * stat is a per-batch MIXTURE ESTIMATE, linear in α. On the
+    * How to read it under GRADUAL shift (SCALE.md round 11, "Drift vs
+    * recall under gradual mixture shift"): for a batch mixing fraction
+    * α of a new mode into the trained distribution, TV grows
+    * ≈ α · TV(pure new mode) — the stat is a per-batch MIXTURE
+    * ESTIMATE, linear in α. On the
     * measured curve, new-data ADC recall had already fallen ~50% from
     * its peak by TV ≈ 0.45, so waiting for a single batch to cross
     * 0.5 reads the alarm late: treat 0.5 as the one-batch alarm (a
@@ -560,10 +561,9 @@ object AnnIndex {
     */
   def append(spark: SparkSession, newRows: DataFrame, table: String,
              cId: String = "vec_id", cVec: String = "embedding",
-             maxRecordsPerFile: Long = 5000000L,
-             recordDrift: Boolean = true): Long =
+             maxRecordsPerFile: Long = 5000000L): Long =
     appendImpl(spark, newRows, table, cId, cVec, maxRecordsPerFile,
-      recordDrift, txn = None)
+      txn = None)
       .getOrElse(throw new IllegalStateException(
         "unreachable: a txn-less index append never skips"))
 
@@ -577,14 +577,13 @@ object AnnIndex {
   def appendOnce(spark: SparkSession, newRows: DataFrame, table: String,
                  appId: String, writerVersion: Long,
                  cId: String = "vec_id", cVec: String = "embedding",
-                 maxRecordsPerFile: Long = 5000000L,
-                 recordDrift: Boolean = true): Option[Long] = {
+                 maxRecordsPerFile: Long = 5000000L): Option[Long] = {
     require(writerVersion >= 0, s"writerVersion must be >= 0, got $writerVersion")
     // cheap fast path: no staging at all for an obvious duplicate
     if (TxTable.txnVersion(spark, table, appId).exists(_ >= writerVersion))
       return None
     appendImpl(spark, newRows, table, cId, cVec, maxRecordsPerFile,
-      recordDrift, txn = Some((appId, writerVersion)))
+      txn = Some((appId, writerVersion)))
   }
 
   /** The shared head-guarded append loop: the commit is conditioned on
@@ -603,12 +602,11 @@ object AnnIndex {
     */
   private def appendImpl(spark: SparkSession, newRows: DataFrame, table: String,
                          cId: String, cVec: String, maxRecordsPerFile: Long,
-                         recordDrift: Boolean,
                          txn: Option[(String, Long)]): Option[Long] =
     appendLoop(spark, table, hash => {
       val (meta, _) = readMetaAt(spark, table, hash)
       encodeWith(meta, hash, newRows, cId, cVec)
-    }, maxRecordsPerFile, recordDrift, txn)
+    }, maxRecordsPerFile, txn)
 
   /** The loop body of [[appendImpl]], parameterized by the frozen-meta
     * encoder (`hash => rows tagged with that hash, cid-assigned`) so
@@ -618,7 +616,6 @@ object AnnIndex {
   private[functions] def appendLoop(spark: SparkSession, table: String,
                                     encode: String => DataFrame,
                                     maxRecordsPerFile: Long,
-                                    recordDrift: Boolean,
                                     txn: Option[(String, Long)]): Option[Long] = {
     var attempt = 0
     var staged: Seq[String] = Nil
@@ -646,13 +643,12 @@ object AnnIndex {
         stagedHash = hash
         // the batch histogram derives from the just-computed commit
         // stats — no extra job (and it only changes when we restage)
-        batch = if (recordDrift) occupancyOfEntries(spark, table,
-          staged.zip(stats)) else Map.empty[Long, Long]
+        batch = occupancyOfEntries(spark, table, staged.zip(stats))
       }
       // the prior side is a driver-side commit-log fold, re-read per
       // attempt so the drift stat reflects the state we commit against
-      val prior = if (recordDrift) occupancyOfEntries(spark, table,
-        TxTable.currentFilesWithStats(spark, table)) else Map.empty[Long, Long]
+      val prior = occupancyOfEntries(spark, table,
+        TxTable.currentFilesWithStats(spark, table))
       try {
         val out = txn match {
           case None => Some(TxTable.commit(spark, table, added = staged,
@@ -663,8 +659,7 @@ object AnnIndex {
         }
         out match {
           case Some(v) =>
-            if (recordDrift) writeDrift(spark, table, v,
-              tvDistance(prior, batch), batch.values.sum)
+            writeDrift(spark, table, v, tvDistance(prior, batch), batch.values.sum)
           case None => dropStaged()
         }
         return out

@@ -117,7 +117,7 @@ object Dedup {
     */
   def minhashCandidatePairs(df: DataFrame, textCol: String, idCol: String,
                             k: Int = 64, bands: Int = 16, threshold: Double = 0.5,
-                            shingleLen: Int = 5, cacheSignatures: Boolean = true,
+                            shingleLen: Int = 5,
                             maxBucketSize: Option[Int] = None): DataFrame = {
     val r = k / bands
     // the signature relation feeds three plan branches (band keys + two
@@ -125,13 +125,10 @@ object Dedup {
     // per branch. Spark evicts under memory pressure; at true corpus
     // scale write the signatures to parquet once and read them back
     // instead (same shape, durable).
-    val sigsPlan = signatures(df, textCol, idCol, k, shingleLen)
     // eager localCheckpoint, not persist: blocks release when the result
     // is GC'd, so repeated library calls in one session don't accumulate
     // cache pressure (round-8 persist-contract sweep)
-    val sigs = if (cacheSignatures)
-      sigsPlan.localCheckpoint(true)
-    else sigsPlan
+    val sigs = signatures(df, textCol, idCol, k, shingleLen).localCheckpoint(true)
     val bandKeys = sigs
       .select(col("id"), posexplode(transform(sequence(lit(0), lit(bands - 1)), b =>
         xxhash64(concat_ws("|",

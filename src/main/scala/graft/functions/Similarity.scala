@@ -351,7 +351,8 @@ object Similarity {
     * constant. The cap bounds BOTH the driver's centroid collect and the
     * per-row argmin expression (which is a literal tree of nCentroids
     * dot products). Explicit counts override — the gate queries pin
-    * (16, 8, 3), the tools.IvfSweep knee on the 500-vector fixture:
+    * (16, 8, 3), the round-5 IVF sweep's knee on the 500-vector
+    * fixture (SCALE.md, "100× scaling probe (round 5)"):
     * recall@10 = 0.9238 (sf0.001) / 0.9190 (sf0.01), floor-pinned at
     * 0.85 by AnnRecallSpec (which also pins the DERIVED sizing at 1×
     * and 10× the fixture). The fixture's probed fraction (8/16) is an
@@ -1502,9 +1503,10 @@ object Similarity {
   }
 
   /** (cluster_id, n) occupancy of the fixed-codebook IMI assignment —
-    * probe tooling (tools.ImiScaleAb) reports the within-cell pair
-    * volume Σ n·(n−1)/2 from it, the quantity the grid keeps LINEAR in
-    * the corpus where the sqrt(n) rule gives n^1.5.
+    * the within-cell pair volume Σ n·(n−1)/2 folds from it, the quantity
+    * the grid keeps LINEAR in the corpus where the sqrt(n) rule gives
+    * n^1.5 (SCALE.md round 10, "the list-count ceiling": 688 → 953 pairs
+    * per row from 20k to 200k rows vs 71 → 224 for the sqrt(n) rule).
     */
   private[graft] def imiCellCounts(df: DataFrame, idCol: String, vecCol: String,
                                    kPerHalf: Int = 0,

@@ -203,8 +203,6 @@ object TextFunctions {
     when(size(toks) === 0, lit(0.0))
       .otherwise(length(concat_ws("", toks)).cast("double") / size(toks))
 
-  def meanTokenLen(text: Column): Column = meanTokenLenFromToks(tokens(text))
-
   /** Composite quality score in [0,1] — the classic pre-training filters
     * (length band, word shape, punctuation sanity, stopword signal), each
     * clamped to a sub-score and averaged. Thresholds are heuristic, the

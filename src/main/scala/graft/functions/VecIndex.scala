@@ -220,12 +220,11 @@ object VecIndex {
     */
   def append(spark: SparkSession, newRows: DataFrame, table: String,
              cId: String = "vec_id", cVec: String = "embedding",
-             maxRecordsPerFile: Long = 5000000L,
-             recordDrift: Boolean = true): Long =
+             maxRecordsPerFile: Long = 5000000L): Long =
     AnnIndex.appendLoop(spark, table,
       hash => assignWith(readMeta(spark, table), newRows, cId, cVec)
         .withColumn(AnnIndex.QzCol, lit(hash)),
-      maxRecordsPerFile, recordDrift, txn = None)
+      maxRecordsPerFile, txn = None)
       .getOrElse(throw new IllegalStateException(
         "unreachable: a txn-less vec append never skips"))
 
@@ -235,15 +234,14 @@ object VecIndex {
   def appendOnce(spark: SparkSession, newRows: DataFrame, table: String,
                  appId: String, writerVersion: Long,
                  cId: String = "vec_id", cVec: String = "embedding",
-                 maxRecordsPerFile: Long = 5000000L,
-                 recordDrift: Boolean = true): Option[Long] = {
+                 maxRecordsPerFile: Long = 5000000L): Option[Long] = {
     require(writerVersion >= 0, s"writerVersion must be >= 0, got $writerVersion")
     if (TxTable.txnVersion(spark, table, appId).exists(_ >= writerVersion))
       return None
     AnnIndex.appendLoop(spark, table,
       hash => assignWith(readMeta(spark, table), newRows, cId, cVec)
         .withColumn(AnnIndex.QzCol, lit(hash)),
-      maxRecordsPerFile, recordDrift, txn = Some((appId, writerVersion)))
+      maxRecordsPerFile, txn = Some((appId, writerVersion)))
   }
 
   private def emptyResult(spark: SparkSession, qId: String): DataFrame = {
@@ -302,7 +300,9 @@ object VecIndex {
     * members through the pruned read — per-batch cost is
     * ~|batch| · targetClusterSize candidate pairs plus the batch's own
     * within-cell pairs; the corpus is never rescanned and nothing is
-    * O(corpus²) (churn measured by tools.SemDedupIncrAb).
+    * O(corpus²) (SCALE.md round 11, "Incremental semantic dedup against
+    * the at-rest corpus": 0.9 → 3.1 s per 2k batch across 18k → 2M
+    * corpus rows, vs 2.0 → 40.5 s for the full re-run).
     */
   def dedupBatch(spark: SparkSession, table: String, batch: DataFrame,
                  idCol: String = "vec_id", vecCol: String = "embedding",

@@ -9,10 +9,10 @@ import org.apache.spark.sql.SparkSession
   * Hadoop-FS equivalent diffs the lake file listing around the write and
   * deletes the additions — works on any FileSystem (local, S3A, HDFS).
   *
-  * The better-at-scale alternative stays available: run-scoped output
-  * paths or `partitionOverwriteMode=dynamic` make re-runs idempotent and
-  * rollback unnecessary (SURVEY.md §4) — this exists for behavioral
-  * parity with the reference's append-only layout.
+  * The better-at-scale alternative is `IngestionRun(txLake = true)`:
+  * the batch is staged and committed only after validation passes, so
+  * there is nothing to roll back (SURVEY.md §4) — this exists for
+  * behavioral parity with the reference's append-only layout.
   */
 object Rollback {
 

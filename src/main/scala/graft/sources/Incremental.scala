@@ -16,13 +16,6 @@ import org.apache.spark.sql.functions._
   */
 object Incremental {
 
-  /** F1: open watermark predicate. */
-  def watermarkGte(deltaCol: Column, start: String): Column = deltaCol >= lit(start)
-
-  /** F2: windowed BETWEEN predicate (voluminous-table day windows). */
-  def watermarkBetween(deltaCol: Column, start: String, end: String): Column =
-    deltaCol.between(lit(start), lit(end))
-
   /** F3 (Column form): `coalesce(a,b) BETWEEN s AND e` expanded to
     * `(a BETWEEN s AND e) OR (b BETWEEN s AND e)`. Semantically equivalent
     * only when `a IS NULL ⇒ rows qualify via b` — which holds for the
@@ -31,9 +24,6 @@ object Incremental {
     */
   def coalesceOrBetween(cols: Seq[Column], start: String, end: String): Column =
     cols.map(_.between(lit(start), lit(end))).reduce(_ || _)
-
-  def coalesceOrGte(cols: Seq[Column], start: String): Column =
-    cols.map(_ >= lit(start)).reduce(_ || _)
 
   /** Parse `coalesce(a, b)` / `ifnull(a, b)` into its column names — the
     * typed replacement for the reference's string slicing

@@ -4,8 +4,7 @@ import java.sql.Timestamp
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 
 import graft.model.{ReasonCode, RunLog, RunStatus}
 
@@ -492,12 +491,4 @@ object LogStore {
   }
 
   def now(): Timestamp = new Timestamp(System.currentTimeMillis())
-
-  /** Latest log row per ingestion id — argmax by insert time with a
-    * deterministic status tie-break (reference picks max insert_datetime
-    * with ties unhandled, start_ingestion.py:96-97; SURVEY.md §7.4).
-    */
-  def latestPerIngestion(logs: DataFrame): DataFrame =
-    graft.operators.LatestRowView.latestPerKey(
-      logs, Seq("lakeIngestionId"), Seq(col("insertDatetime"), col("executionStatus")))
 }

@@ -10,9 +10,9 @@ import org.apache.spark.sql.execution.ExplainMode
   * rounds (plans/rNN/<query>_<tag>.txt). Usage:
   * `runMain graft.tools.PlanDump <sfDir> <outDir> <tag> [q1,q2,...]`.
   *
-  * Formatted mode (vs [[ExplainDump]]'s executedPlan.toString) numbers
-  * the operators and prints per-scan PushedFilters/ReadSchema — the
-  * details a plan-shape claim is checked against.
+  * Formatted mode (vs a bare executedPlan.toString) numbers the
+  * operators and prints per-scan PushedFilters/ReadSchema — the details
+  * a plan-shape claim is checked against.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {

@@ -189,20 +189,23 @@ class IngestionRunSpec extends SparkSpec {
     assert(latest.count() == 3)
   }
 
-  test("overwritePartitions mode makes same-window re-runs idempotent") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-e2e-ow").toString
-    val storeA = new graft.state.LogStore(spark, s"$dir/logsA")
-    val run = new IngestionRun(spark, s"$dir/lake", storeA, overwritePartitions = true)
-    val spec = mkSpec(Seq(PartitionSpec(1, PartitionSpec.TimeBased, "mtime", "YYYYMM")))
-    val batch = srcRows(Seq(
-      (1L, "a", "2023-01-10 10:00:00"), (2L, "b", "2023-02-10 10:00:00")))
-    assert(run.run(spec, batch).last.executionStatus == RunStatus.Success)
-    // simulate a redo of the same window with fresh state (e.g. log loss):
-    // dynamic overwrite replaces the touched partitions, so no duplicates
-    val storeB = new graft.state.LogStore(spark, s"$dir/logsB")
-    val redo = new IngestionRun(spark, s"$dir/lake", storeB, overwritePartitions = true)
-    assert(redo.run(spec, batch).last.executionStatus == RunStatus.Success)
-    assert(spark.read.parquet(s"$dir/lake/testdb/events_src").count() == 2)
+  test("a failing run releases the lake tail it cached (missing primary-key column)") {
+    spark.catalog.clearCache()
+    val dir = java.nio.file.Files.createTempDirectory("graft-e2e-leak").toString
+    val store = new graft.state.LogStore(spark, s"$dir/logs")
+    val run = new IngestionRun(spark, s"$dir/lake", store, inclusiveBump = false)
+    // a control-sheet typo: the pk column does not exist in the source
+    val spec = mkSpec(Nil).copy(primaryKey = "id_typo")
+    assert(run.run(spec, srcRows(Seq((1L, "a", "2023-01-01 10:00:00"))))
+      .last.executionStatus == RunStatus.Success)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    // the second run caches the lake tail, then the boundary-dedup join
+    // fails analysis on the missing column
+    intercept[org.apache.spark.sql.AnalysisException] {
+      run.run(spec, srcRows(Seq((2L, "b", "2023-01-01 10:00:05"))))
+    }
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the lake-tail plan must not stay registered in the session cache")
   }
 
   test("coalesce delta expression drives watermark and slice") {
